@@ -7,6 +7,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's MemTotal, at most 48g: a fixed 48g heap gets the
+    driver JVM OOM-killed on hosts with less memory than that."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(48 * 1024, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "48g"
+
+
 def build_session(
     app_name: str = "geo_polygonize_spark",
     cores: int | None = None,
@@ -16,7 +29,8 @@ def build_session(
     """Tuned local session. ``cores`` defaults to $SPARK_GRAFT_CPUS or
     all. Shuffle partitions sized to cores (not the 200 default) so
     small-SF local runs don't drown in empty tasks; AQE coalesces the
-    rest at cluster scale."""
+    rest at cluster scale. The driver heap is $SPARK_DRIVER_MEM, or
+    half of MemTotal capped at 48g."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
     if shuffle_partitions is None:
@@ -31,7 +45,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )

@@ -5,8 +5,8 @@ SURVEY.md §2.9) and the north_rule asks for resumable checkpoints
 rather than Structured Streaming semantics. This module is the bridge
 for callers that DO receive linework as a stream.
 
-Incremental design — per-batch cost is O(touched tiles), independent
-of the store size:
+Incremental design — per-batch cost is O(batch): the segments, tiles
+and keys the batch touches, not the store size:
 
 1. Each micro-batch segmentizes its lines, assigns tiles (the same
    buffered-replication expressions as the batch path), and APPENDS
@@ -14,25 +14,37 @@ of the store size:
 2. The batch's touched tile set (usually a handful of partitions) is
    re-read via explicit partition paths — directory pruning, not a
    store scan.
-3. The checkpointed recompute (checkpoint.resumable_tiled_polygonize
+3. The checkpoint's commit step (checkpoint.commit_tiled_polygonize
    with ``scope_to_assigned``) runs over ONLY those tiles: per-tile
    content fingerprints skip unchanged sub-tiles, superseded split
    layouts inside touched parents are tombstoned, and untouched tiles
-   remain valid committed coverage.
+   remain valid committed coverage. The batch ends with that commit;
+   it reads no coverage back.
 
-Earlier design re-read the ENTIRE lines store every trigger (the
-fingerprints skipped kernels but the scan itself grew with history);
-the tile-partitioned store removes that O(corpus) per-batch term.
+One term still grows with the store's history: the commit reads the
+latest metrics row per key from the WHOLE metrics log (one row per
+committed key per run), so each trigger's metrics scan is
+O(triggers so far), pruned by the touched parents' row-group
+statistics.
+
+Earlier designs re-read the ENTIRE lines store every trigger (the
+fingerprints skipped kernels but the scan itself grew with history)
+and counted the whole committed coverage at the end of every batch;
+the tile-partitioned store and the commit-only batch remove both
+O(store) terms.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..checkpoint import resumable_tiled_polygonize
+from ..checkpoint import commit_tiled_polygonize
 from ..operators.polygonize_op import assign_tiles, segmentize_df
 
 import numpy as np
+
+# the segment store's layout: tile_i / tile_j are its partition columns
+SEGMENT_SCHEMA = "x1 double, y1 double, x2 double, y2 double, tile_i int, tile_j int"
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -74,17 +86,21 @@ def streaming_polygonize(
     seg_root = f"{store_dir}/segments"
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         seg = assign_tiles(
             segmentize_df(batch_df), tile_size, buffer, x0, y0, cols, rows
         ).persist()
-        seg.write.mode("append").partitionBy("tile_i", "tile_j").parquet(seg_root)
-        touched = [
-            (int(r["tile_i"]), int(r["tile_j"]))
-            for r in seg.select("tile_i", "tile_j").distinct().collect()
-        ]
-        seg.unpersist()
+        try:
+            touched = [
+                (int(r["tile_i"]), int(r["tile_j"]))
+                for r in seg.select("tile_i", "tile_j").distinct().collect()
+            ]
+            if not touched:
+                # no rows, or only lines that yield no segment (fewer
+                # than two vertices): nothing to store or recompute
+                return
+            seg.write.mode("append").partitionBy("tile_i", "tile_j").parquet(seg_root)
+        finally:
+            seg.unpersist()
         # partition existence through the Hadoop FileSystem API — a
         # driver-side os.path check only works on local filesystems;
         # on HDFS/object stores it silently filtered EVERY path out,
@@ -98,8 +114,10 @@ def streaming_polygonize(
                 f"streaming_polygonize: {len(missing)} touched segment "
                 f"partitions missing after append (first: {missing[0]})"
             )
-        pruned = spark.read.option("basePath", seg_root).parquet(*paths)
-        resumable_tiled_polygonize(
+        pruned = (
+            spark.read.schema(SEGMENT_SCHEMA).option("basePath", seg_root).parquet(*paths)
+        )
+        commit_tiled_polygonize(
             spark,
             None,
             ckpt_dir,
@@ -110,7 +128,7 @@ def streaming_polygonize(
             y0=y0,
             buffer=buffer,
             **polygonize_kwargs,
-        ).count()
+        )
 
     w = lines_stream.writeStream.foreachBatch(on_batch).option(
         "checkpointLocation", f"{ckpt_dir}/_stream_meta"

@@ -5,7 +5,8 @@ import pytest
 def spark():
     from geo_polygonize_spark.plans import build_session
 
-    s = build_session("tests", cores=8, shuffle_partitions=8)
+    # cores: $SPARK_GRAFT_CPUS, else every core of the host
+    s = build_session("tests", shuffle_partitions=8)
     yield s
     s.stop()
 
